@@ -1,15 +1,15 @@
 """Closed-loop benchmark of one workload.
 
-    python3 e2ebench/run.py --workload flagship_sink --seed 1 --seconds 15 --trace 0
+    python3 e2ebench/run.py --workload flagship_sink --seed 1 --seconds 18 --trace 0
 
-One driver process runs ``local[nproc]`` and one job at a time: it builds the
-session, runs one cold job (with ``build_session`` that is ``setup_s``),
-``WARMUP_JOBS`` warm-up jobs, then jobs until ``--seconds`` have passed. The
-end-to-end metrics are medians over the jobs after the warm-up. Every job's
-output row count is checked, and the last job's output digest is compared
-with a DuckDB oracle. ``--trace 1`` runs the same loop and then the per-layer
-spans of ``layers.py``. The last stdout line is the JSON result; the per-job
-record goes to ``<work>/runs/``.
+One driver process runs ``local[nproc - spare_cores]`` and one job at a
+time: it builds the session, runs one cold job (with ``build_session`` that
+is ``setup_s``), the workload's ``warmup_jobs``, then jobs for
+``--seconds``. The end-to-end metrics are medians over the jobs after the
+warm-up. Every job's output row count is checked, and the last job's output
+digest is compared with a DuckDB oracle. ``--trace 1`` runs the same loop and
+then the per-layer spans of ``layers.py``. The last stdout line is the JSON
+result; the per-job record goes to ``<work>/runs/``.
 """
 
 from __future__ import annotations
@@ -26,22 +26,22 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".e2ebench_work")
-# one warm-up job, not a warm-up time: on a faster host a time budget fits
-# more warm-up jobs, the measured jobs sit further down the JIT curve, and
-# host speed differences between runs are amplified
-WARMUP_JOBS = 1
 # end-to-end metrics (name, unit), in report order
 E2E = [("rows_per_s", "1/s"), ("wall_s", "s"), ("cpu_s", "s"), ("peak_rss_mb", "MB"), ("setup_s", "s")]
 
 
-def host_conf(work_dir: str) -> tuple[str, dict[str, str]]:
-    """Master and ``build_session`` overrides fitted to this host: every
-    usable core, a driver heap of an eighth of ``MemTotal`` (1-8 GiB), and
-    Spark's local and temp dirs under the work directory.
+def host_conf(work_dir: str, spare_cores: int) -> tuple[str, dict[str, str]]:
+    """Master and ``build_session`` overrides fitted to this host: a task
+    thread on every usable core but ``spare_cores``, a driver heap of an
+    eighth of ``MemTotal`` (1-8 GiB), and Spark's local and temp dirs under
+    the work directory.
+
+    The spare cores are for the driver, the JIT compiler and GC threads; a
+    task thread on every core made runs spread wider and no faster.
 
     The heap starts at its full size (``-Xms``): with a growing heap, when
     G1 chose to expand it moved peak RSS by ~20% between runs."""
-    cores = len(os.sched_getaffinity(0))
+    cores = max(1, len(os.sched_getaffinity(0)) - spare_cores)
     with open("/proc/meminfo") as f:
         mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     heap_mb = max(1024, min(8192, mem_kb // 8 // 1024))
@@ -128,7 +128,7 @@ def main(argv=None) -> int:
 
     from marmot_spark.session import build_session
 
-    master, conf = host_conf(WORK)
+    master, conf = host_conf(WORK, wl_cls.spare_cores)
     details["master"], details["conf"] = master, conf
     t = time.perf_counter()
     spark = build_session(f"e2ebench-{args.workload}", master=master, extra_conf=conf)
@@ -166,11 +166,19 @@ def main(argv=None) -> int:
 
         cold = one_job("cold")
         setup_s = session_s + (cold["wall_s"] if cold else 0.0)
-        for _ in range(WARMUP_JOBS):
+        # the warm-up is a count of jobs, not a time: with a time, a faster
+        # host would measure jobs further down the JIT curve and widen the
+        # gap between fast and slow runs
+        for _ in range(wl.warmup_jobs):
             one_job("warmup")
         deadline = time.perf_counter() + args.seconds
-        while time.perf_counter() < deadline:
-            one_job("measure")
+        while True:
+            rec = one_job("measure")
+            # a job is started only if, going by the last one, its midpoint
+            # falls before the deadline: runs measure --seconds on average
+            # and do not overrun by a whole job
+            if rec is None or time.perf_counter() + rec["wall_s"] / 2 > deadline:
+                break
 
         measured = [j for j in jobs if j["phase"] == "measure"]
 

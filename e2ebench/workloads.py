@@ -39,7 +39,11 @@ def _digest(con, relation: str, int_cols, float_cols=()) -> tuple[int, int]:
 class FlagshipSink:
     name = "flagship_sink"
     kind = "flagship"
-    size = 30_000  # sequences, ~2.9M feature rows per job
+    size = 15_000  # sequences, ~1.4M feature rows per job
+    warmup_jobs = 2  # job times flatten from the fourth job on
+    # the job is bound by the driver and the JIT (~5 CPU-s per steady job,
+    # as much as its tasks): two cores are left to them
+    spare_cores = 2
 
     def __init__(self, inputs: dict, work_dir: str) -> None:
         self.data = inputs["dir"]
@@ -87,7 +91,10 @@ class FlagshipSink:
 class DedupMinhash:
     name = "dedup_minhash"
     kind = "dedup"
-    size = 30_000  # docs
+    size = 10_000  # docs
+    warmup_jobs = 6  # ~2 s jobs; JIT CPU per job falls from ~6 s to ~2 s over them
+    # the job is bound by its tasks: one core is left to the driver and JIT
+    spare_cores = 1
 
     def __init__(self, inputs: dict, work_dir: str) -> None:
         self.data = inputs["dir"]
